@@ -3,7 +3,9 @@ package graft
 import graft.app.KgBuild
 import graft.model.RunConfig
 import graft.source.TranscriptGen
-import org.apache.spark.sql.SparkSession
+import graft.util.Json
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.util.{Failure, Try}
 
 /** Benchmark main (driver contract): runs the headline end-to-end KG build
   * (extract → link → canonicalize → materialize-shaped counts) plus every
@@ -81,6 +83,32 @@ object Bench {
     ts.toSeq
   }
 
+  /** Runs each query twice (forced with `count()`) and returns the
+    * wall-time trails of the queries that succeeded both times, and the
+    * first error of each query that threw. A failed query is never timed:
+    * it appears only in the errors.
+    */
+  def timeQueries(spark: SparkSession, sfDir: String,
+      queries: Seq[(String, (SparkSession, String) => DataFrame)])
+      : (Map[String, Seq[Double]], Map[String, String]) = {
+    val runs = queries.map { case (name, fn) =>
+      name -> (1 to 2).map { _ =>
+        val t0 = System.nanoTime()
+        val r = Try(fn(spark, sfDir).count())
+        val dt = (System.nanoTime() - t0) / 1e9
+        spark.catalog.clearCache()
+        r.map(_ => dt)
+      }
+    }
+    val errors = runs.flatMap { case (name, rs) =>
+      rs.collectFirst { case Failure(e) => name -> e.toString }
+    }.toMap
+    val trails = runs.collect { case (name, rs) if !errors.contains(name) =>
+      name -> rs.map(_.get)
+    }.toMap
+    (trails, errors)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -110,16 +138,7 @@ object Bench {
     // in-JVM; the min is the reported number and the full trail is emitted,
     // so a contaminated execution is self-evident in the artifact instead of
     // silently becoming the headline — same policy kg_run_sec already has.
-    val trails = SparkEntry.queries.map { case (name, fn) =>
-      val ts = (1 to 2).map { _ =>
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-        val dt = (System.nanoTime() - t0) / 1e9
-        spark.catalog.clearCache()
-        dt
-      }
-      name -> ts
-    }
+    val (trails, errors) = timeQueries(spark, sfDir, SparkEntry.queries.toSeq)
     val results = trails.map { case (name, ts) => name -> ts.min }
     val qs = (results ++ Map("kg_pipeline_e2e" -> kgSec))
       .map { case (k, v) => "\"" + k + "\":" + v }
@@ -127,11 +146,14 @@ object Bench {
     val trailsJson = trails
       .map { case (k, ts) => "\"" + k + "\":" + ts.mkString("[", ",", "]") }
       .mkString("{", ",", "}")
+    val errorsJson = errors
+      .map { case (k, e) => Json.str(k) + ":" + Json.str(e) }
+      .mkString("{", ",", "}")
     val total = results.values.sum + kgSec
     val warmJson = warmups.mkString("[", ",", "]")
     val runsJson = runSecs.mkString("[", ",", "]")
     println(
-      s"""{"metric":"end-to-end triples/sec (extract->link->canonicalize->materialize)","value":$triplesPerSec,"unit":"triples/sec","total_sec":$total,"kg_turns":$nTurns,"kg_triples":$nTriples,"kg_convs":$headlineConvs,"kg_warmup_sec":$warmJson,"kg_run_sec":$runsJson,"queries":$qs,"query_trails":$trailsJson,"sf":"$sfDir"}""")
+      s"""{"metric":"end-to-end triples/sec (extract->link->canonicalize->materialize)","value":$triplesPerSec,"unit":"triples/sec","total_sec":$total,"kg_turns":$nTurns,"kg_triples":$nTriples,"kg_convs":$headlineConvs,"kg_warmup_sec":$warmJson,"kg_run_sec":$runsJson,"queries":$qs,"query_trails":$trailsJson,"errors":$errorsJson,"sf":"$sfDir"}""")
     spark.stop()
   }
 }

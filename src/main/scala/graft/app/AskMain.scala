@@ -1,7 +1,8 @@
 package graft.app
 
 import graft.operators.Retrieval
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.util.Json
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Thin query CLI over the materialized graph tables — reproduces the
@@ -73,6 +74,23 @@ object AskMain {
       topK: Int = 5, includeSemantic: Boolean = true): DataFrame =
     ask(spark, graphView(spark, graphDir), question, topK, includeSemantic)
 
+  /** One match row of [[ask]] as a JSON object. */
+  def matchJson(r: Row, includeSemantic: Boolean): String = {
+    val sem =
+      if (includeSemantic && !r.isNullAt(r.fieldIndex("semantic_nodes")))
+        Json.strs(r.getSeq[String](r.fieldIndex("semantic_nodes")))
+      else "[]"
+    s"""{"chunk_uid":${Json.str(r.getAs[String]("chunk_uid"))},""" +
+      s""""score":${Json.num(r.getAs[Double]("score"))},""" +
+      s""""document":${Json.str(r.getAs[String]("document"))},"semantic_nodes":$sem}"""
+  }
+
+  /** The CLI's output: one JSON line per match, then a summary line. */
+  def jsonLines(rows: Seq[Row], includeSemantic: Boolean, question: String,
+      durMs: Double): Seq[String] =
+    rows.map(matchJson(_, includeSemantic)) :+
+      s"""{"matches":${rows.length},"duration_ms":${Json.num(durMs)},"question":${Json.str(question)}}"""
+
   def main(args: Array[String]): Unit = {
     val a = KgBuildMain.parseArgs(args)
     val graphDir = a.getOrElse("graph", "/tmp/graft-kg-out")
@@ -91,18 +109,9 @@ object AskMain {
     spark.sparkContext.setLogLevel("WARN")
     val t0 = System.nanoTime()
     val rows = ask(spark, graphDir, question, topK, includeSemantic)
-      .orderBy(col("score").desc).collect()
+      .orderBy(col("score").desc).collect().toSeq
     val durMs = (System.nanoTime() - t0) / 1e6
-    rows.foreach { r =>
-      val sem =
-        if (includeSemantic && !r.isNullAt(r.fieldIndex("semantic_nodes")))
-          r.getSeq[String](r.fieldIndex("semantic_nodes")).mkString("[\"", "\",\"", "\"]")
-        else "[]"
-      println(
-        s"""{"chunk_uid":"${r.getAs[String]("chunk_uid")}","score":${r.getAs[Double]("score")},""" +
-          s""""document":"${Option(r.getAs[String]("document")).getOrElse("")}","semantic_nodes":$sem}""")
-    }
-    println(s"""{"matches":${rows.length},"duration_ms":$durMs,"question":${"\"" + question + "\""}}""")
+    jsonLines(rows, includeSemantic, question, durMs).foreach(println)
     spark.stop()
   }
 }

@@ -1,6 +1,7 @@
 package graft.app
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
+import graft.util.Json
 import java.net.{InetSocketAddress, URLDecoder}
 import java.nio.charset.StandardCharsets
 import org.apache.spark.sql.SparkSession
@@ -17,6 +18,8 @@ import org.apache.spark.sql.functions._
   *
   *   GET /health                          -> {"status":"ok"}
   *   GET /ask?q=<question>&k=<n>&semantic=<bool>  -> JSON array of matches
+  *       (400 with an error body for a missing q, a k that is not a
+  *       positive integer, or a semantic that is not true/false)
   *   GET /fetch?id=<node id>              -> node row (embedding stripped)
   *
   * Usage: runMain graft.app.AskServer --graph /tmp/kg --port 8080
@@ -25,16 +28,6 @@ import org.apache.spark.sql.functions._
   *                              auth on /ask and /fetch — /health stays open)
   */
 object AskServer {
-
-  private def jsonEscape(s: String): String = s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  }
 
   private def params(ex: HttpExchange): Map[String, String] =
     Option(ex.getRequestURI.getRawQuery).getOrElse("").split("&")
@@ -51,10 +44,6 @@ object AskServer {
     val os = ex.getResponseBody
     try os.write(bytes) finally os.close()
   }
-
-  /** JSON-safe double: a NaN/Infinity score must not emit invalid JSON. */
-  private def jsonNum(d: Double): String =
-    if (java.lang.Double.isFinite(d)) d.toString else "null"
 
   /** Internal errors return a generic body; the exception goes to the server
     * log, not the client (raw messages can carry paths/query fragments).
@@ -112,25 +101,18 @@ object AskServer {
       handleSafely(ex) { requireAuth(ex, token) {
         val p = params(ex)
         val q = p.getOrElse("q", "")
-        if (q.isEmpty) respond(ex, 400, """{"error":"missing q"}""")
-        else {
-          val k = p.get("k").map(_.toInt).getOrElse(5)
-          val semantic = p.get("semantic").forall(_.toBoolean)
-          val rows = AskMain.ask(spark, view, q, k, semantic)
-            .orderBy(col("score").desc).collect()
-          val items = rows.map { r =>
-            val sem =
-              if (semantic && !r.isNullAt(r.fieldIndex("semantic_nodes")))
-                r.getSeq[String](r.fieldIndex("semantic_nodes"))
-                  .map(jsonEscape).mkString("[\"", "\",\"", "\"]")
-              else "[]"
-            s"""{"chunk_uid":"${r.getAs[String]("chunk_uid")}",""" +
-              s""""score":${jsonNum(r.getAs[Double]("score"))},""" +
-              s""""document":"${jsonEscape(Option(r.getAs[String]("document")).getOrElse(""))}",""" +
-              s""""semantic_nodes":$sem}"""
-          }
-          respond(ex, 200,
-            s"""{"question":"${jsonEscape(q)}","matches":${items.mkString("[", ",", "]")}}""")
+        val k = p.get("k").fold(Option(5))(_.toIntOption.filter(_ > 0))
+        val semantic = p.get("semantic").fold(Option(true))(_.toBooleanOption)
+        (k, semantic) match {
+          case _ if q.isEmpty => respond(ex, 400, """{"error":"missing q"}""")
+          case (None, _) => respond(ex, 400, """{"error":"k must be a positive integer"}""")
+          case (_, None) => respond(ex, 400, """{"error":"semantic must be true or false"}""")
+          case (Some(k), Some(semantic)) =>
+            val rows = AskMain.ask(spark, view, q, k, semantic)
+              .orderBy(col("score").desc).collect()
+            val items = rows.map(AskMain.matchJson(_, semantic))
+            respond(ex, 200,
+              s"""{"question":${Json.str(q)},"matches":${items.mkString("[", ",", "]")}}""")
         }
       } })
     server.createContext("/fetch", (ex: HttpExchange) =>
@@ -142,9 +124,9 @@ object AskServer {
             val rows = graft.operators.Retrieval.fetchById(view.nodes, id)
               .select("id", "labels", "name").collect()
             val items = rows.map { r =>
-              s"""{"id":"${jsonEscape(r.getAs[String]("id"))}",""" +
-                s""""labels":${r.getSeq[String](1).map(jsonEscape).mkString("[\"", "\",\"", "\"]")},""" +
-                s""""name":"${jsonEscape(r.getAs[String]("name"))}"}"""
+              s"""{"id":${Json.str(r.getAs[String]("id"))},""" +
+                s""""labels":${Json.strs(r.getSeq[String](1))},""" +
+                s""""name":${Json.str(r.getAs[String]("name"))}}"""
             }
             respond(ex, 200, items.mkString("[", ",", "]"))
         }
@@ -170,7 +152,7 @@ object AskServer {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val server = start(spark, graphDir, port, bind, token)
-    println(s"""{"serving":"http://localhost:${server.getAddress.getPort}","graph":"$graphDir"}""")
+    println(s"""{"serving":"http://localhost:${server.getAddress.getPort}","graph":${Json.str(graphDir)}}""")
     Thread.currentThread.join() // serve until killed
   }
 }

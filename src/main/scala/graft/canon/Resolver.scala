@@ -21,19 +21,6 @@ import org.apache.spark.storage.StorageLevel
   */
 object Resolver {
 
-  /** Connected components over undirected string edges.
-    *
-    * Each round combines min-label propagation (take the min of the
-    * neighbors' labels) with POINTER JUMPING (then take the label of your
-    * label), so chains collapse in O(log diameter) rounds rather than
-    * O(diameter) — Dedup.minhashClusters feeds this arbitrary near-dup graphs
-    * whose component diameter is unbounded, where plain propagation could
-    * exhaust maxIter. Exhausting maxIter with changes still pending throws
-    * rather than silently returning wrong cluster reps.
-    *
-    * @return DataFrame(member, rep) covering every node that appears in any
-    *         edge; rep = lexicographic min of the component.
-    */
   /** Edge bound under which the closure runs driver-side. A CC fixpoint
     * round costs several eager jobs (two joins + checkpoint + convergence
     * count), so on small graphs the distributed path is pure fixed overhead
@@ -45,46 +32,66 @@ object Resolver {
     */
   private val DriverCcMaxEdges = 200000
 
+  /** Connected components over undirected string edges.
+    *
+    * Each round combines min-label propagation (take the min of the
+    * neighbors' labels) with POINTER JUMPING (then take the label of your
+    * label), so chains collapse in O(log diameter) rounds rather than
+    * O(diameter) — Dedup.minhashClusters feeds this arbitrary near-dup graphs
+    * whose component diameter is unbounded, where plain propagation could
+    * exhaust maxIter. Exhausting maxIter with changes still pending throws
+    * rather than silently returning wrong cluster reps.
+    *
+    * The path is chosen by ONE bounded collect of at most DriverCcMaxEdges + 1
+    * edges: a small graph is closed driver-side from the rows that collect
+    * brought back, with no separate count job. The trade-off: an over-bound
+    * graph ships DriverCcMaxEdges + 1 edge rows to the driver once, and drops
+    * them, before it falls back to the distributed fixpoint. Callers that
+    * know their graph is large can skip the probe entirely via
+    * [[connectedComponentsDistributed]].
+    *
+    * @return DataFrame(member, rep) covering every node that appears in any
+    *         edge; rep = lexicographic min of the component.
+    */
   def connectedComponents(edges: DataFrame, maxIter: Int = 50): DataFrame = {
-    val spark = edges.sparkSession
     // Null endpoints carry no linkage evidence and would NPE the driver-side
     // union-find (getString) — drop them up front on both paths.
     val e = edges.toDF("u", "v")
       .filter(col("u").isNotNull && col("v").isNotNull)
-    // SMALL-GRAPH FAST PATH, decided by a LIMIT-pushed count: an over-bound
-    // graph pays one early-terminating count job instead of shipping ~200k
-    // rows to the driver only to discard them. A small graph pays the count
-    // plus the (bounded) collect — both cheap. Callers that know their graph
-    // is large can skip the probe entirely via
-    // [[connectedComponentsDistributed]].
-    val overBound = e.limit(DriverCcMaxEdges + 1).count() > DriverCcMaxEdges
-    if (!overBound) {
-      import spark.implicits._
-      val probe = e.collect()
-      val parent = scala.collection.mutable.HashMap.empty[String, String]
-      def find(x: String): String = {
-        var r = x
-        while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
-        var c = x
-        while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
-        r
-      }
-      probe.foreach { row =>
-        val (u, v) = (row.getString(0), row.getString(1))
-        parent.getOrElseUpdate(u, u); parent.getOrElseUpdate(v, v)
-        val (ru, rv) = (find(u), find(v))
-        if (ru != rv) parent(ru) = rv
-      }
-      val members = parent.keys.toSeq
-      val minOfRoot = scala.collection.mutable.HashMap.empty[String, String]
-      members.foreach { m =>
-        val r = find(m)
-        val cur = minOfRoot.get(r)
-        if (cur.isEmpty || m < cur.get) minOfRoot(r) = m
-      }
-      return members.sorted.map(m => (m, minOfRoot(find(m)))).toDF("member", "rep")
+    driverComponents(e).getOrElse(connectedComponentsDistributed(e, maxIter))
+  }
+
+  /** The driver-side union-find closure of `e`, or None when `e` has more
+    * than DriverCcMaxEdges edges (the collected rows are unreachable once
+    * this returns, so the distributed path does not run beside them).
+    */
+  private def driverComponents(e: DataFrame): Option[DataFrame] = {
+    val probe = e.limit(DriverCcMaxEdges + 1).collect()
+    if (probe.length > DriverCcMaxEdges) return None
+    val parent = scala.collection.mutable.HashMap.empty[String, String]
+    def find(x: String): String = {
+      var r = x
+      while (parent.getOrElse(r, r) != r) r = parent.getOrElse(r, r)
+      var c = x
+      while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
+      r
     }
-    connectedComponentsDistributed(e, maxIter)
+    probe.foreach { row =>
+      val (u, v) = (row.getString(0), row.getString(1))
+      parent.getOrElseUpdate(u, u); parent.getOrElseUpdate(v, v)
+      val (ru, rv) = (find(u), find(v))
+      if (ru != rv) parent(ru) = rv
+    }
+    val members = parent.keys.toSeq
+    val minOfRoot = scala.collection.mutable.HashMap.empty[String, String]
+    members.foreach { m =>
+      val r = find(m)
+      val cur = minOfRoot.get(r)
+      if (cur.isEmpty || m < cur.get) minOfRoot(r) = m
+    }
+    val spark = e.sparkSession
+    import spark.implicits._
+    Some(members.sorted.map(m => (m, minOfRoot(find(m)))).toDF("member", "rep"))
   }
 
   /** The distributed pointer-jumping fixpoint (package-visible so tests can

@@ -12,11 +12,17 @@ import org.apache.spark.sql.functions._
   * sketch → band → bucket-join → verify → connected-components shape so the
   * candidate-pair step is a co-partitioned equi-join (never an all-pairs
   * product), which is what survives 100 TB:
-  *   - MinHash+LSH: per-row signature (narrow mapPartitions), band keys,
-  *     self-join on (band_idx, band_hash), similarity-verify on signatures,
-  *     cluster with the same CC fixpoint used for entity canonicalization.
+  *   - MinHash+LSH: exact-text groups collapsed by one aggregate, per-rep
+  *     signature (narrow mapPartitions), band keys, self-join on
+  *     (band_idx, band_hash), similarity-verify on signatures, cluster with
+  *     the same CC closure used for entity canonicalization.
   *   - SimHash: 64-bit weighted-token fingerprint; pigeonhole banding on
   *     4x16-bit keys guarantees recall for hamming distance <= 3.
+  *   - n-gram Jaccard (exact): prefix-filtered inverted-index self-join,
+  *     verified on full gram sets.
+  * Each shuffle and broadcast stage of an operator runs once per call:
+  * tables read twice are cached and released before the operator returns
+  * (`plans/dedup` holds the executed plans with their exchange counts).
   */
 object Dedup {
 
@@ -99,10 +105,43 @@ object Dedup {
 
   /** Full MinHash-LSH dedup: cluster near-duplicates, keep min id per cluster.
     * Returns (id, cluster_rep).
+    *
+    * Stage shape — each stage runs once per call:
+    *   1. one aggregate per exact-text group (sha2 of the text) gives the
+    *      group's rep id and rep text together, cached;
+    *   2. signatures of the reps, cached (read by the band self-join and
+    *      both signature joins of [[minhashPairs]]);
+    *   3. the near-dup pairs feed only the connected-components step, whose
+    *      driver fast path collects them in one bounded collect;
+    *   4. every member maps to its cluster through its group: the groups
+    *      left-joined to the (small) components, then joined to the members
+    *      on the text hash.
     */
   def minhashClusters(df: DataFrame, idCol: String, textCol: String,
       numHashes: Int = 64, shingle: Int = 5, bands: Int = 16,
-      threshold: Double = 0.7): DataFrame = {
+      threshold: Double = 0.7): DataFrame =
+    materialize(minhashClustersPlan(df, idCol, textCol, numHashes, shingle, bands, threshold))
+
+  /** Eagerly materializes an operator's plan (its small result rows,
+    * disk-backed), then RELEASES the tables the plan cached — a library
+    * operator must not leak storage memory into a long-lived session.
+    * localCheckpoint also truncates the multi-join lineage for downstream
+    * consumers.
+    */
+  private def materialize(built: (DataFrame, Seq[DataFrame])): DataFrame = {
+    val (plan, cached) = built
+    val result = plan.localCheckpoint()
+    cached.foreach(_.unpersist())
+    result
+  }
+
+  /** The unmaterialized (id, cluster_rep) plan of [[minhashClusters]] and the
+    * tables it caches. Runs the connected-components step eagerly (its
+    * driver fast path collects the near-dup edges). Package-visible so tests
+    * and PlanDump can inspect the physical plan.
+    */
+  private[graft] def minhashClustersPlan(df: DataFrame, idCol: String, textCol: String,
+      numHashes: Int, shingle: Int, bands: Int, threshold: Double): (DataFrame, Seq[DataFrame]) = {
     // Collapse EXACT duplicates first (hash groupBy): identical texts share
     // every band hash, so a group of N exact dups would otherwise blow the
     // band self-join up by N² — the dominant skew hazard on boilerplate-heavy
@@ -111,25 +150,22 @@ object Dedup {
     // the clustering the naive form would produce.
     val withSha = df.select(col(idCol).cast("long").as("id"),
       col(textCol).as("__text"), sha2(coalesce(col(textCol), lit("")), 256).as("__sha"))
+    // One aggregate yields each group's rep id AND its text: ids are unique,
+    // so the struct min is decided by the id alone. Null ids are skipped
+    // (like min(id)); a group with no non-null id has no rep and drops out.
+    val reps = withSha.groupBy("__sha")
+      .agg(min(when(col("id").isNotNull, struct(col("id"), col("__text")))).as("rep"))
+      .filter(col("rep").isNotNull)
+      .select(col("__sha"), col("rep.id").as("rep_id"), col("rep.__text").as("text"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val reps = withSha.groupBy("__sha").agg(min(col("id")).as("rep_id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // ids are unique, so `id === rep_id` alone identifies the rep doc of each
-    // sha group (rep_id is min(id) OVER the group — matching sha is implied).
-    // An additional `__sha === __sha` clause would resolve both sides to the
-    // SAME attribute (reps derives from withSha) and degenerate to a
-    // trivially-true predicate; keep intent and executed plan identical.
-    val repDocs = withSha.join(reps, withSha("id") === reps("rep_id"))
-      .select(col("rep_id").as("doc_id"), col("__text").as("text"))
 
-    val sigs = signatures(repDocs, "doc_id", "text", numHashes, shingle)
+    val sigs = signatures(reps, "rep_id", "text", numHashes, shingle)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val pairs = minhashPairs(sigs, numHashes, bands, threshold)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // The CC fixpoint only needs the reps that are IN a near-dup pair —
     // a tiny graph on real corpora. Singleton reps (the overwhelming
-    // majority at scale) map to themselves with one anti-join instead of
-    // riding every fixpoint round as self-edges.
+    // majority at scale) keep themselves through the left join below
+    // instead of riding every fixpoint round as self-edges.
     // Ids are ZERO-PADDED for the string-keyed CC so its lexicographic-min
     // rep IS the numeric min — the operator's contract is "cluster_rep =
     // lowest doc id in the cluster" (keep-lowest-id dedup; requires
@@ -146,23 +182,14 @@ object Dedup {
       .select(pad(col("id_a")).as("u"), pad(col("id_b")).as("v"))
     val clustered = Resolver.connectedComponents(pairEdges)
       .select(col("member").cast("long").as("rep_id"), col("rep").cast("long").as("cluster_rep"))
-    val singletonReps = sigs.select(col("id").as("rep_id"))
-      .join(pairs.select(col("id_a").as("rep_id"))
-        .unionByName(pairs.select(col("id_b").as("rep_id"))), Seq("rep_id"), "left_anti")
-      .select(col("rep_id"), col("rep_id").as("cluster_rep"))
-    val repClusters = clustered.unionByName(singletonReps)
-    // map every member through its exact-text rep
+    val shaClusters = reps.select(col("__sha"), col("rep_id"))
+      .join(clustered, Seq("rep_id"), "left")
+      .select(col("__sha"), coalesce(col("cluster_rep"), col("rep_id")).as("cluster_rep"))
+    // map every member through its exact-text group
     val result = withSha.select(col("id"), col("__sha"))
-      .join(reps, "__sha")
-      .join(repClusters, "rep_id")
+      .join(shaClusters, "__sha")
       .select(col("id"), col("cluster_rep"))
-      // Eagerly materialize (ids-only rows, disk-backed), then RELEASE the
-      // four cached intermediates — a library operator must not leak storage
-      // memory into a long-lived session. localCheckpoint also truncates the
-      // multi-join lineage for downstream consumers.
-      .localCheckpoint()
-    Seq(withSha, reps, sigs, pairs).foreach(_.unpersist())
-    result
+    (result, Seq(reps, sigs))
   }
 
   // ---------------- SimHash ----------------
@@ -288,23 +315,6 @@ object Dedup {
 
   // ---------------- n-gram Jaccard (exact, for verify/eval) ----------------
 
-  /** Exact word n-gram Jaccard pairs at `threshold`, with PREFIX-FILTERED
-    * candidate generation (AllPairs/PPJoin principle, Bayardo et al. WWW'07):
-    * under a consistent global gram order (document frequency asc, gram asc —
-    * rarest first), any pair with Jaccard >= t must share a gram inside both
-    * docs' prefixes of length |g| - ceil(t*|g|) + 1, so only those prefix
-    * grams enter the inverted-index self-join. This bounds the join by the
-    * prefix posting lists instead of the full ones — the round-1 unbounded
-    * version was quadratic in hot-gram df (64.9 s at sf0.1, the slowest bench
-    * query; a common 3-gram alone yields O(df²) pairs). The result is still
-    * EXACT: no pair at threshold can be lost (prefix-filter guarantee), and
-    * surviving candidates verify true Jaccard over their FULL gram sets.
-    */
-  /** Distinct word n-grams of a text column (lowercased, ws-tokenized);
-    * texts shorter than n tokens yield their single partial gram. Shared by
-    * [[ngramJaccardPairs]] and [[ngramContamination]] (and mirrored
-    * verbatim by their DuckDB oracles).
-    */
   /** Lowercased whitespace tokens of a text column. ALWAYS materialize this
     * through its own projection before feeding it to a gram lambda:
     * higher-order functions evaluate interpreted, and a non-attribute `toks`
@@ -318,7 +328,11 @@ object Dedup {
   private def tokArray(textCol: String): org.apache.spark.sql.Column =
     filter(split(lower(col(textCol)), "\\s+"), x => length(x) > 0)
 
-  /** Distinct word n-gram strings from a MATERIALIZED token-array column. */
+  /** Distinct word n-gram strings from a MATERIALIZED token-array column;
+    * texts shorter than n tokens yield their single partial gram. Shared by
+    * [[ngramJaccardPairs]] and [[ngramContamination]] (and mirrored verbatim
+    * by their DuckDB oracles).
+    */
   private def gramsFromToks(toks: org.apache.spark.sql.Column, n: Int): org.apache.spark.sql.Column =
     array_distinct(
       transform(sequence(lit(0), greatest(size(toks) - n, lit(0))),
@@ -335,9 +349,36 @@ object Dedup {
       transform(sequence(lit(0), greatest(size(th) - n, lit(0))),
         i => aggregate(slice(th, i + 1, lit(n)), lit(42L), (acc, h) => xxhash64(acc, h))))
 
-  /** hashGrams = true is the 100 TB path (same construction as
+  /** Exact word n-gram Jaccard pairs at `threshold`, with PREFIX-FILTERED
+    * candidate generation (AllPairs/PPJoin principle, Bayardo et al. WWW'07):
+    * under a consistent global gram order (document frequency asc, gram asc —
+    * rarest first), any pair with Jaccard >= t must share a gram inside both
+    * docs' prefixes of length |g| - ceil(t*|g|) + 1, so only those prefix
+    * grams enter the inverted-index self-join. This bounds the join by the
+    * prefix posting lists instead of the full ones — the round-1 unbounded
+    * version was quadratic in hot-gram df (64.9 s at sf0.1, the slowest bench
+    * query; a common 3-gram alone yields O(df²) pairs). The result is still
+    * EXACT: no pair at threshold can be lost (prefix-filter guarantee), and
+    * surviving candidates verify true Jaccard over their FULL gram sets.
+    *
+    * Stage shape — each stage runs once per call:
+    *   1. the per-doc distinct gram arrays, cached (read by the posting and
+    *      by both verify joins);
+    *   2. the posting (id, n_grams, gram) exchanged by gram, where a window
+    *      count gives each gram's document frequency;
+    *   3. the same rows exchanged by id, where a row_number window keeps each
+    *      doc's rarest-first prefix; the prefix table is cached, so both
+    *      sides of the gram self-join read it and the sides' identical gram
+    *      exchanges run once (the second is reused);
+    *   4. the candidate distinct, then the two verify joins against the
+    *      cached gram arrays (AQE broadcasts them while they are small).
+    * No broadcast hints: at vocabulary or corpus scale every join falls back
+    * to a shuffle, and the gram exchange that feeds the df window is the one
+    * a shuffled df join would have needed anyway.
+    *
+    * hashGrams = true is the 100 TB path (same construction as
     * [[ngramContamination]]): gram keys are 8-byte token-hash chains, never
-    * strings, so the posting explode, df join, prefix self-join, and the
+    * strings, so the posting explode, df window, prefix self-join, and the
     * final gram-set intersect all move longs. Jaccard VALUES are unchanged
     * (gram equality ⇔ chain equality w.h.p., so set cardinalities match) —
     * the hashed path shares the string path's value-exact oracle; the
@@ -345,7 +386,15 @@ object Dedup {
     * which (df asc, hash asc) provides just as (df asc, gram asc) did.
     */
   def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String,
-      n: Int = 3, threshold: Double = 0.5, hashGrams: Boolean = false): DataFrame = {
+      n: Int = 3, threshold: Double = 0.5, hashGrams: Boolean = false): DataFrame =
+    materialize(ngramJaccardPlan(df, idCol, textCol, n, threshold, hashGrams))
+
+  /** The unmaterialized plan of [[ngramJaccardPairs]] and the tables it
+    * caches (the caller releases them once the plan has run). Package-visible
+    * so tests and PlanDump can inspect the physical plan.
+    */
+  private[graft] def ngramJaccardPlan(df: DataFrame, idCol: String, textCol: String,
+      n: Int, threshold: Double, hashGrams: Boolean): (DataFrame, Seq[DataFrame]) = {
     val grams = (if (hashGrams)
       df.select(col(idCol).cast("long").as("id"),
         transform(tokArray(textCol), t => xxhash64(t)).as("__th"))
@@ -354,32 +403,28 @@ object Dedup {
       df.select(col(idCol).cast("long").as("id"), tokArray(textCol).as("__toks"))
         .select(col("id"), gramsFromToks(col("__toks"), n).as("grams")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val posting = grams.select(col("id"), size(col("grams")).as("n_grams"),
-      explode(col("grams")).as("gram"))
-    // document frequency per DISTINCT gram: a partial-aggregated groupBy
-    // (vocab-sized result) joined back onto the posting — a window over the
-    // full posting would shuffle-SORT every posting row by gram instead. No
-    // broadcast hint: AQE broadcasts when the gram vocabulary is small and
-    // falls back to a shuffle join when it isn't (web-scale n-gram
-    // vocabularies don't fit in a broadcast).
-    val gramDf = posting.groupBy("gram").agg(count(lit(1)).as("df"))
-    val prefix = posting
-      .join(gramDf, Seq("gram"))
+    // Document frequency comes from the exchange that partitions the posting
+    // by gram (a window count), and the rarest-first prefix from the one that
+    // partitions it by id — the posting crosses each exchange once. The
+    // prefix is cached so both self-join sides read one computation.
+    val prefix = grams
+      .select(col("id"), size(col("grams")).as("n_grams"), explode(col("grams")).as("gram"))
+      .withColumn("df", count(lit(1)).over(Window.partitionBy("gram")))
       .withColumn("pos", row_number().over(
         Window.partitionBy("id").orderBy(col("df"), col("gram"))))
       .filter(col("pos") <= col("n_grams") - ceil(lit(threshold) * col("n_grams")) + 1)
+      .select(col("gram"), col("id"), col("n_grams"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // AllPairs length filter: jaccard >= t implies |A∩B| <= min(|A|,|B|) and
     // |A∩B| >= t*max(|A|,|B|), so min >= t*max — provably lossless, and it
     // prunes the candidate explosion among same-gram docs of incompatible
     // sizes before the distinct/verify stages.
-    val a = prefix.select(col("gram"), col("id").as("id_a"), col("n_grams").as("na"))
-    val b = prefix.select(col("gram"), col("id").as("id_b"), col("n_grams").as("nb"))
-    val pairs = a.join(b, Seq("gram"))
-      .filter(col("id_a") < col("id_b") &&
-        least(col("na"), col("nb")).cast("double") >=
-          lit(threshold) * greatest(col("na"), col("nb")).cast("double"))
-      .select("id_a", "id_b").distinct()
-    val result = pairs
+    val (na, nb) = (col("a.n_grams"), col("b.n_grams"))
+    val pairs = prefix.as("a").join(prefix.as("b"), col("a.gram") === col("b.gram"))
+      .filter(col("a.id") < col("b.id") &&
+        least(na, nb).cast("double") >= lit(threshold) * greatest(na, nb).cast("double"))
+      .select(col("a.id").as("id_a"), col("b.id").as("id_b")).distinct()
+    val verified = pairs
       .join(grams.select(col("id").as("id_a"), col("grams").as("grams_a")), Seq("id_a"))
       .join(grams.select(col("id").as("id_b"), col("grams").as("grams_b")), Seq("id_b"))
       .withColumn("shared", size(array_intersect(col("grams_a"), col("grams_b"))))
@@ -388,11 +433,7 @@ object Dedup {
           (size(col("grams_a")) + size(col("grams_b")) - col("shared")))
       .filter(col("jaccard") >= threshold)
       .select("id_a", "id_b", "jaccard")
-      // eager materialize (surviving pairs only — small), then release the
-      // cached gram table; see minhashClusters for the storage-leak rationale
-      .localCheckpoint()
-    grams.unpersist()
-    result
+    (verified, Seq(grams, prefix))
   }
 
   /** Eval-set decontamination (the GPT-3 n-gram overlap rule): training

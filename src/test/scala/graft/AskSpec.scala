@@ -257,4 +257,50 @@ class AskSpec extends AnyFunSuite {
         s"query $i: batch=${batch(i.toLong)} single=$single")
     }
   }
+
+  /** A small built graph shared by the request-hygiene tests below. */
+  lazy val hygieneGraph: String = {
+    val dir = Files.createTempDirectory("graft-askhygiene").toString
+    val turns = TranscriptGen.table(spark, 6L).toDF()
+    assert(KgBuild.run(spark, turns,
+      RunConfig(runKey = "kg:askhygiene", numPartitions = 2), dir).status == "pass")
+    dir
+  }
+
+  test("AskMain CLI lines parse as JSON for a question with a quote, backslash and newline") {
+    val question = "Who founded \"Acme\" Corp?\\ back\nslash"
+    val rows = AskMain.ask(spark, hygieneGraph, question, topK = 3)
+      .orderBy(col("score").desc).collect().toSeq
+    val lines = AskMain.jsonLines(rows, includeSemantic = true, question, durMs = 1.0)
+    assert(lines.size == rows.size + 1 && rows.nonEmpty)
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val parsed = lines.map(mapper.readTree)
+    assert(parsed.last.get("question").asText == question)
+    assert(parsed.last.get("matches").asInt == rows.size)
+    assert(parsed.init.forall(_.get("semantic_nodes").isArray))
+    spark.catalog.clearCache()
+  }
+
+  test("/ask answers 400 with an error body for a bad k or semantic") {
+    val server = graft.app.AskServer.start(spark, hygieneGraph, port = 0)
+    try {
+      val base = s"http://localhost:${server.getAddress.getPort}/ask?q=Acme"
+      val client = java.net.http.HttpClient.newHttpClient()
+      def get(params: String): (Int, String) = {
+        val resp = client.send(
+          java.net.http.HttpRequest.newBuilder(java.net.URI.create(base + params)).build(),
+          java.net.http.HttpResponse.BodyHandlers.ofString())
+        (resp.statusCode(), resp.body())
+      }
+      assert(get("&k=abc") == ((400, """{"error":"k must be a positive integer"}""")))
+      assert(get("&k=0") == ((400, """{"error":"k must be a positive integer"}""")))
+      assert(get("&k=-2") == ((400, """{"error":"k must be a positive integer"}""")))
+      assert(get("&semantic=maybe") == ((400, """{"error":"semantic must be true or false"}""")))
+      // well-formed values still answer
+      assert(get("&k=2&semantic=FALSE")._1 == 200)
+    } finally {
+      server.stop(0)
+      spark.catalog.clearCache()
+    }
+  }
 }

@@ -200,6 +200,64 @@ class OperatorsSpec extends AnyFunSuite {
     assert(rows(true).nonEmpty)
   }
 
+  test("ngramJaccardPairs computes document frequency and the id-partitioned prefix once") {
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.expressions.aggregate.Count
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
+    import org.apache.spark.sql.execution.window.WindowExec
+    def hashedOn(e: ShuffleExchangeExec): Seq[String] = e.outputPartitioning match {
+      case h: HashPartitioning => h.expressions.collect { case a: Attribute => a.name }
+      case _ => Nil
+    }
+    for (hashGrams <- Seq(false, true)) {
+      // AQE and broadcasts off: the static plan is the one that runs, with
+      // every join shuffled, so each exchange in it is one stage.
+      val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
+      val prevBc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+      val (nodes, cached) =
+        try {
+          spark.conf.set("spark.sql.adaptive.enabled", "false")
+          spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+          val (plan, cached) = Dedup.ngramJaccardPlan(docs, "doc_id", "text", 3, 0.5, hashGrams)
+          (PlanDump.executedNodes(plan.queryExecution.executedPlan), cached)
+        } finally {
+          spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+          spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevBc)
+        }
+      cached.foreach(_.unpersist())
+      val dfWindows = nodes.collect {
+        case w: WindowExec if w.windowExpression.exists(_.find(_.isInstanceOf[Count]).isDefined) => w
+      }
+      val gramAggregates = nodes.collect {
+        case a: BaseAggregateExec if a.groupingExpressions.exists(_.references.exists(_.name == "gram")) => a
+      }
+      val exchanges = nodes.collect { case e: ShuffleExchangeExec => hashedOn(e) }
+      val mode = if (hashGrams) "hashed" else "string"
+      assert(dfWindows.size == 1 && gramAggregates.isEmpty,
+        s"$mode: document frequency must come from one window over the gram exchange")
+      assert(exchanges.count(_ == Seq("id")) == 1,
+        s"$mode: the posting must cross the id-partitioned prefix exchange once")
+      // one gram exchange under the df window, one for the self-join; the
+      // join's second side reuses the first side's
+      assert(exchanges.count(_ == Seq("gram")) == 2, s"$mode: $exchanges")
+      assert(nodes.exists(_.isInstanceOf[ReusedExchangeExec]), s"$mode: self-join side not reused")
+    }
+  }
+
+  test("minhashClusters runs a pinned number of Spark jobs") {
+    // AQE on (the session default): each query stage is one job, so this
+    // pins the operator's stage count. The input is fixed, so the count is.
+    val sc = spark.sparkContext
+    try {
+      sc.setJobGroup("minhash-jobs", "minhashClusters job-count pin")
+      Dedup.minhashClusters(docs, "doc_id", "text", threshold = 0.6)
+    } finally sc.clearJobGroup()
+    val jobs = sc.statusTracker.getJobIdsForGroup("minhash-jobs").length
+    assert(jobs == 14, s"minhashClusters ran $jobs jobs")
+  }
+
   test("term-schema scanner is equivalent to word-boundary regex counting") {
     val terms = Seq("spark", "join", "agg", "query")
     val ex = graft.extract.Extractor.termExtractor(terms)
