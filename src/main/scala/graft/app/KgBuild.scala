@@ -153,41 +153,38 @@ object KgBuild {
     // cap. Under broadcast nothing partitions, so the link side is neither
     // measured nor salted.
     val parallelism = spark.sessionState.conf.numShufflePartitions
-    val (hotNorms: Option[Seq[String]], hotProvNorms: Seq[String]) =
-      if (broadcastCanonical && !cfg.saltProvenance) (None, Nil)
-      else {
-        val gazMap = Resolver.canonicalNormMap(spark)
-        val isGaz = col("norm").isin(gazMap.keys.toSeq: _*)
-        // A mention links iff its norm is a gazetteer norm (colliding
-        // candidates link through the gazetteer row) or a candidate norm at
-        // support — linkedN is that mention count, 0 for norms that drop out.
-        val linkedN = when(isGaz || col("__n_cand") >= cfg.minCandidateSupport,
-          col("__n")).otherwise(lit(0L))
-        val totals = normStats
-          .agg(sum(col("__n")).as("ta"), sum(linkedN).as("tl")).first()
-        val totAll = if (totals.isNullAt(0)) 0L else totals.getLong(0)
-        val totLinked = if (totals.isNullAt(1)) 0L else totals.getLong(1)
-        val thrAll = math.max(totAll / math.max(parallelism, 1), 1L)
-        val thrLinked = math.max(totLinked / math.max(parallelism, 1), 1L)
-        // Bounded collect: every gazetteer norm (dictionary-sized — needed to
-        // fold canon-group counts exactly) plus norms over either threshold
-        // (at most `parallelism` keys can exceed a total/parallelism bound).
-        val hotRows = normStats
-          .filter(isGaz || col("__n") > thrAll || linkedN > thrLinked)
-          .select(col("norm"), col("__n"), linkedN.as("__ln"))
-          .collect()
-        val linkHot = hotRows.filter(_.getLong(1) > thrAll)
-          .sortBy(r => (-r.getLong(1), r.getString(0)))
-          .take(64).map(_.getString(0)).toSeq
-        val provHot = hotRows
-          .groupBy(r => gazMap.getOrElse(r.getString(0), r.getString(0)))
-          .map { case (canon, rs) => canon -> rs.map(_.getLong(2)).sum }
-          .filter(_._2 > math.max(thrLinked, cfg.saltProvenanceFloor)).toSeq
-          .sortBy { case (canon, n) => (-n, canon) }
-          .take(64).map(_._1)
-        (if (broadcastCanonical) None else Some(linkHot),
-          if (cfg.saltProvenance) provHot else Nil)
-      }
+    val (hotNorms: Option[Seq[String]], hotProvNorms: Seq[String]) = {
+      val gazMap = Resolver.canonicalNormMap(spark)
+      val isGaz = col("norm").isin(gazMap.keys.toSeq: _*)
+      // A mention links iff its norm is a gazetteer norm (colliding
+      // candidates link through the gazetteer row) or a candidate norm at
+      // support — linkedN is that mention count, 0 for norms that drop out.
+      val linkedN = when(isGaz || col("__n_cand") >= cfg.minCandidateSupport,
+        col("__n")).otherwise(lit(0L))
+      val totals = normStats
+        .agg(sum(col("__n")).as("ta"), sum(linkedN).as("tl")).first()
+      val totAll = if (totals.isNullAt(0)) 0L else totals.getLong(0)
+      val totLinked = if (totals.isNullAt(1)) 0L else totals.getLong(1)
+      val thrAll = math.max(totAll / math.max(parallelism, 1), 1L)
+      val thrLinked = math.max(totLinked / math.max(parallelism, 1), 1L)
+      // Bounded collect: every gazetteer norm (dictionary-sized — needed to
+      // fold canon-group counts exactly) plus norms over either threshold
+      // (at most `parallelism` keys can exceed a total/parallelism bound).
+      val hotRows = normStats
+        .filter(isGaz || col("__n") > thrAll || linkedN > thrLinked)
+        .select(col("norm"), col("__n"), linkedN.as("__ln"))
+        .collect()
+      val linkHot = hotRows.filter(_.getLong(1) > thrAll)
+        .sortBy(r => (-r.getLong(1), r.getString(0)))
+        .take(64).map(_.getString(0)).toSeq
+      val provHot = hotRows
+        .groupBy(r => gazMap.getOrElse(r.getString(0), r.getString(0)))
+        .map { case (canon, rs) => canon -> rs.map(_.getLong(2)).sum }
+        .filter(_._2 > math.max(thrLinked, cfg.saltProvenanceFloor)).toSeq
+        .sortBy { case (canon, n) => (-n, canon) }
+        .take(64).map(_._1)
+      (if (broadcastCanonical) None else Some(linkHot), provHot)
+    }
     normStats.unpersist()
     val linkSalt =
       if (broadcastCanonical) cfg.saltBuckets
@@ -243,7 +240,7 @@ object KgBuild {
     // resolved one, so the engine stays config-free by default
     val gitProp: Seq[org.apache.spark.sql.Column] =
       cfg.gitCommit.toSeq.flatMap(sha => Seq(lit("git_commit"), lit(sha)))
-    // Provenance-skew contract (RunConfig.saltProvenance): collect_set does
+    // Provenance-skew contract (saltProvenanceFloor): collect_set does
     // not shrink under partial aggregation (its partial state IS the set),
     // so a stop entity's (canon, chunk_uid) pairs would all funnel through
     // one reducer before maxProvenanceChunkUids could apply. hotProvNorms
@@ -491,22 +488,11 @@ object KgBuild {
     //    before the nodes manifest row landed) invisible at read;
     //  - chunks / turn_checksums dedupe on their natural keys for the same
     //    crash-window reason.
-    // The default path (cfg.incrementalQa) evaluates the same gate from
-    // fingerprint-keyed per-partition partials so an incremental run's QA
-    // cost scales with the delta, not the accumulated history; results are
-    // pinned equal to the full evaluation (ResumeSpec).
-    val qa =
-      if (cfg.incrementalQa)
-        IncrementalQa.evaluate(spark, outDir, turns, cfg, thresholds)
-      else {
-        val allNodes = Materializer.mergeRows(spark.read.parquet(s"$outDir/nodes"), Seq("id"))
-        val allEdges = Materializer.mergeRows(
-          spark.read.parquet(s"$outDir/edges"), Seq("src", "dst", "rel_type"))
-        val allChunks = spark.read.parquet(s"$outDir/chunks").dropDuplicates("chunk_uid")
-        val allChecksums = spark.read.parquet(s"$outDir/turn_checksums")
-          .dropDuplicates("conv_id", "turn_idx")
-        QaEvaluator.evaluate(turns, allChecksums, allChunks, allNodes, allEdges, thresholds)
-      }
+    // IncrementalQa evaluates that gate from fingerprint-keyed per-partition
+    // partials, so an incremental run's QA cost scales with the delta, not
+    // the accumulated history; ResumeSpec pins it equal to
+    // QaEvaluator.evaluate over the merged tables.
+    val qa = IncrementalQa.evaluate(spark, outDir, turns, cfg, thresholds)
     if (qa.status == "fail") rollbackRun(spark, outDir, Seq(cfg.runKey))
     qa
   }
@@ -749,7 +735,7 @@ object KgBuild {
     edges
       // entity-to-entity semantic relations — selected structurally (both
       // endpoints are entities), not by a hardcoded predicate list (P7)
-      .filter(col("props").getItem("semantic_source").isNotNull &&
+      .filter(QaEvaluator.semanticEdge &&
         col("src").startsWith("ent:") && col("dst").startsWith("ent:"))
       .join(names.withColumnRenamed("name", "subj"), col("src") === col("id")).drop("id")
       .join(names.withColumnRenamed("name", "obj"), col("dst") === col("id")).drop("id")

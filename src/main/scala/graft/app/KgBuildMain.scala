@@ -2,8 +2,9 @@ package graft.app
 
 import graft.materialize.Materializer
 import graft.model.{ChunkProfile, RunConfig}
-import graft.qa.QaEvaluator.QaThresholds
+import graft.qa.QaEvaluator.{QaResult, QaThresholds}
 import graft.source.TranscriptGen
+import graft.util.Json
 import org.apache.spark.sql.SparkSession
 
 /** spark-submit entrypoint — the engine's analog of the reference CLI
@@ -39,6 +40,18 @@ object KgBuildMain {
       else key.foreach(k => m(k) = if (m(k).isEmpty) t else m(k) + " " + t)
     }
     m.filter(_._2.nonEmpty).toMap
+  }
+
+  /** The run-log artifact (ref:src/fancyrag/kg/pipeline.py:1489-1546): one
+    * JSON object whose every string goes through [[Json]], so a run key
+    * holding a quote, backslash or newline still writes valid JSON.
+    */
+  def runLog(cfg: RunConfig, qa: QaResult): String = {
+    def obj(m: Map[String, Long]): String =
+      m.toSeq.sortBy(_._1).map { case (k, v) => s"${Json.str(k)}:$v" }.mkString("{", ",", "}")
+    s"""{"run_key":${Json.str(cfg.runKey)},"status":${Json.str(qa.status)},""" +
+      s""""git_commit":${Json.str(cfg.gitCommit.getOrElse("unknown"))},""" +
+      s""""counts":${obj(qa.counts)},"anomalies":${obj(qa.anomalies)}}"""
   }
 
   def main(args: Array[String]): Unit = {
@@ -103,12 +116,7 @@ object KgBuildMain {
       else spark.read.parquet(input)
 
     val qa = KgBuild.run(spark, turns, cfg, out, thresholds)
-    // run-log artifact (sanitized JSON), ref:src/fancyrag/kg/pipeline.py:1489-1546
-    val log =
-      s"""{"run_key":"${cfg.runKey}","status":"${qa.status}",""" +
-        s""""git_commit":"${cfg.gitCommit.getOrElse("unknown")}",""" +
-        s""""counts":{${qa.counts.toSeq.sortBy(_._1).map { case (k, v) => s""""$k":$v""" }.mkString(",")}},""" +
-        s""""anomalies":{${qa.anomalies.toSeq.sortBy(_._1).map { case (k, v) => s""""$k":$v""" }.mkString(",")}}}"""
+    val log = runLog(cfg, qa)
     println(log)
     // artifact names pass the filesystem-safe sanitizer (F5); per-run copies
     // live under a run-key-derived directory like the reference's per-source

@@ -153,16 +153,9 @@ final case class RunConfig(
     // the cap, so judged outputs are unchanged; an entity hot enough to trip
     // it behaves like a stopword in retrieval expansion anyway. The cap
     // bounds the ROW; the REDUCER's in-flight set is bounded separately by
-    // the heavy-hitter-targeted two-phase aggregation (saltProvenance,
-    // KgBuild.cappedProvenanceAgg).
+    // the heavy-hitter-targeted two-phase aggregation
+    // (KgBuild.cappedProvenanceAgg, gated by saltProvenanceFloor).
     maxProvenanceChunkUids: Int = 10000,
-    // Aggregate measured-hot entities' chunk_uids provenance in two salted
-    // phases (KgBuild.cappedProvenanceAgg) so a stop entity's collect_set
-    // state can't concentrate on one reducer before the row cap applies.
-    // Outputs are byte-identical either way (pinned by PipelineSpec); the
-    // switch exists so the parity can be asserted end-to-end, not as a
-    // correctness knob.
-    saltProvenance: Boolean = true,
     // Absolute floor for provenance salting: a canon group only routes
     // through the two-phase aggregation when its linked-mention count
     // ALSO exceeds this many rows. Hotness relative to total/parallelism
@@ -172,18 +165,13 @@ final case class RunConfig(
     // 40%-hot stop entity is orders of magnitude past this floor, so the
     // protection is unchanged where it matters; at bench scale the build
     // keeps the cheaper single-phase plan. Parity between the two plans is
-    // byte-exact either way (PipelineSpec pins it with the floor at 0).
+    // byte-exact either way (PipelineSpec pins it with the floor at 0
+    // against Long.MaxValue, which keeps every group single-phase).
     saltProvenanceFloor: Long = 1000000L,
     // Input-change detection column (Iceberg snapshot-id analog): when set,
     // Materializer.inputChecksums fingerprints (conv_id, <this column>)
     // instead of re-hashing the full text every run — the caller promises
     // the version moves whenever the content moves. None = full-text
     // checksum scan (always correct, but O(corpus) per run).
-    inputVersionCol: Option[String] = None,
-    // Evaluate the QA gate incrementally from fingerprint-keyed per-partition
-    // partial aggregates (IncrementalQa) instead of re-aggregating the full
-    // accumulated graph every run. Results are pinned equal to the full
-    // evaluation (ResumeSpec); the cache is fingerprint-validated, so a
-    // stale or crashed cache only ever costs a recompute.
-    incrementalQa: Boolean = true
+    inputVersionCol: Option[String] = None
 )

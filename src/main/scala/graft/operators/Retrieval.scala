@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.Embeddings
+import graft.qa.QaEvaluator
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -165,7 +166,7 @@ object Retrieval {
           .as("chunk_uid"))
     val entIds = entityNodes.select(col("ent_id").as("__eid"))
     val semEdges = edges
-      .filter(col("props").getItem("semantic_source").isNotNull)
+      .filter(QaEvaluator.semanticEdge)
       .select(col("src"), col("rel_type"), col("dst"))
       .join(entIds, col("src") === col("__eid"), "left_semi")
       .join(entIds, col("dst") === col("__eid"), "left_semi")

@@ -4,8 +4,9 @@ import graft.materialize.Materializer
 import graft.model.RunConfig
 import graft.qa.QaEvaluator.{QaResult, QaThresholds}
 import graft.util.Determinism
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, StringType}
 
 /** Incremental QA: evaluate the gate from per-partition PARTIAL AGGREGATES
   * cached on disk, recomputing only the partitions whose files changed —
@@ -133,33 +134,24 @@ object IncrementalQa {
         .flatMap(p => Seq(lit(p), lit(fpOf(p)))): _*)
       df.withColumn("group", lit(group)).withColumn("fp", fpMap(col("part_id")))
     }
+    val none = lit(null).cast("string")
+    def partial(kind: String, a: Column = none, b: Column = none, c: Column = none,
+        n: Column = lit(0L)): Seq[Column] =
+      Seq(col("part_id"), lit(kind).as("kind"), a.as("a"), b.as("b"), c.as("c"), n.as("n"))
 
     val fresh = scala.collection.mutable.ArrayBuffer[DataFrame]()
 
-    // ---- chunk stats partials (mirrors QaEvaluator action 1) ----
+    // ---- chunk stats partials: QaEvaluator's chunk-pass aggregates per
+    //      partition, one scan, melted into one `stat` row per aggregate ----
     stale.get("chunk").filter(_.nonEmpty).foreach { parts =>
-      val t = QaEvaluator.tokenEstimate
-      val bucket = QaEvaluator.tokenBucket
-      val ch = pruned("chunks", parts).dropDuplicates("chunk_uid")
-      val agg = ch.groupBy("part_id").agg(
-        count(lit(1)).as("chunks"),
-        sum(t).as("tok_total"),
-        max(t).as("tok_max"),
-        sum(length(col("text"))).as("chars_total"),
-        sum(when(col("embedding").isNull || size(col("embedding")) === 0, 1L)
-          .otherwise(0L)).as("missing_emb"))
-      val hist = ch.groupBy(col("part_id"), bucket.as("a"))
-        .agg(count(lit(1)).as("n"))
-        .select(col("part_id"), lit("stat").as("kind"),
-          concat(lit("hist:"), col("a")).as("a"), lit(null).cast("string").as("b"),
-          lit(null).cast("string").as("c"), col("n"))
-      val statNames = Seq("chunks", "tok_total", "tok_max", "chars_total", "missing_emb")
-      val melted = agg.select(col("part_id"), explode(array(statNames.map(sn =>
-        struct(lit(sn).as("a"), col(sn).cast("long").as("n"))): _*)).as("s"))
-        .select(col("part_id"), lit("stat").as("kind"), col("s.a").as("a"),
-          lit(null).cast("string").as("b"), lit(null).cast("string").as("c"),
-          col("s.n").as("n"))
-      fresh += withFp(melted.unionByName(hist), "chunk", fpChunks)
+      val aggs = QaEvaluator.chunkAggs
+      val agg = pruned("chunks", parts).dropDuplicates("chunk_uid")
+        .groupBy("part_id").agg(aggs.head, aggs.tail: _*)
+      val stats = agg.columns.filter(_ != "part_id")
+        .map(sn => struct(lit(sn).as("a"), col(sn).as("n")))
+      val melted = agg.select(col("part_id"), explode(array(stats: _*)).as("s"))
+        .select(partial("stat", a = col("s.a"), n = col("s.n")): _*)
+      fresh += withFp(melted, "chunk", fpChunks)
     }
 
     // ---- orphan-chunk partials ----
@@ -171,9 +163,7 @@ object IncrementalQa {
       // partitions with zero orphans still need a cache row
       val base = parts.toDF("part_id")
         .join(orph, Seq("part_id"), "left")
-        .select(col("part_id"), lit("orphans").as("kind"),
-          lit(null).cast("string").as("a"), lit(null).cast("string").as("b"),
-          lit(null).cast("string").as("c"), coalesce(col("n"), lit(0L)).as("n"))
+        .select(partial("orphans", n = coalesce(col("n"), lit(0L))): _*)
       fresh += withFp(base, "orphan",
         p => mixFp(fpChunks(p), fpEdges.getOrElse(p, "-")))
     }
@@ -191,9 +181,7 @@ object IncrementalQa {
         .groupBy("part_id").agg(count(lit(1)).as("n"))
       val base = parts.toDF("part_id")
         .join(mism, Seq("part_id"), "left")
-        .select(col("part_id"), lit("mismatches").as("kind"),
-          lit(null).cast("string").as("a"), lit(null).cast("string").as("b"),
-          lit(null).cast("string").as("c"), coalesce(col("n"), lit(0L)).as("n"))
+        .select(partial("mismatches", n = coalesce(col("n"), lit(0L))): _*)
       fresh += withFp(base, "checksum", fpChecks)
     }
 
@@ -203,12 +191,9 @@ object IncrementalQa {
       val nonEnt = nd.filter(!col("id").startsWith("ent:"))
         .select(col("part_id"), explode(col("labels")).as("a"))
         .groupBy("part_id", "a").agg(count(lit(1)).as("n"))
-        .select(col("part_id"), lit("label").as("kind"), col("a"),
-          lit(null).cast("string").as("b"), lit(null).cast("string").as("c"), col("n"))
+        .select(partial("label", a = col("a"), n = col("n")): _*)
       val ent = nd.filter(col("id").startsWith("ent:"))
-        .select(col("part_id"), lit("ent").as("kind"), col("id").as("a"),
-          to_json(col("labels")).as("b"), lit(null).cast("string").as("c"),
-          lit(0L).as("n"))
+        .select(partial("ent", a = col("id"), b = to_json(col("labels"))): _*)
       fresh += withFp(nonEnt.unionByName(ent), "node", fpNodes)
     }
 
@@ -220,19 +205,14 @@ object IncrementalQa {
         .dropDuplicates("part_id", "src", "dst", "rel_type")
       val nonEnt = dist.filter(!col("src").startsWith("ent:"))
         .groupBy("part_id", "rel_type").agg(count(lit(1)).as("n"))
-        .select(col("part_id"), lit("rel").as("kind"), col("rel_type").as("a"),
-          lit(null).cast("string").as("b"), lit(null).cast("string").as("c"), col("n"))
+        .select(partial("rel", a = col("rel_type"), n = col("n")): _*)
       val semKeys = dist.filter(col("src").startsWith("ent:"))
-        .select(col("part_id"), lit("semkey").as("kind"), col("src").as("a"),
-          col("dst").as("b"), col("rel_type").as("c"), lit(0L).as("n"))
-      val endpoints = ed
-        .filter(col("props").getItem("semantic_source").isNotNull)
+        .select(partial("semkey", a = col("src"), b = col("dst"), c = col("rel_type")): _*)
+      val endpoints = ed.filter(QaEvaluator.semanticEdge)
         .select(col("part_id"), explode(array(col("src"), col("dst"))).as("a"))
         .filter(col("a").startsWith("ent:"))
         .dropDuplicates("part_id", "a")
-        .select(col("part_id"), lit("endpoint").as("kind"), col("a"),
-          lit(null).cast("string").as("b"), lit(null).cast("string").as("c"),
-          lit(0L).as("n"))
+        .select(partial("endpoint", a = col("a")): _*)
       fresh += withFp(nonEnt.unionByName(semKeys).unionByName(endpoints), "edge", fpEdges)
     }
 
@@ -249,76 +229,40 @@ object IncrementalQa {
         "label", "rel"))
       .groupBy("kind", "a").agg(sum("n").as("sum_n"), max("n").as("max_n"))
       .collect()
-    def statSum(kind: String, name: String): Long = statRows
-      .filter(r => r.getString(0) == kind && (name == null || r.getString(1) == name))
-      .map(_.getLong(2)).sum
-    val tokMax = statRows.filter(r => r.getString(0) == "stat" && r.getString(1) == "tok_max")
-      .map(_.getLong(3)).foldLeft(0L)(math.max)
-
-    val chunksN = statSum("stat", "chunks")
-    val hist = statRows.filter(r => r.getString(0) == "stat" && r.getString(1).startsWith("hist:"))
-      .map(r => r.getString(1).stripPrefix("hist:") -> r.getLong(2))
-      .filter(_._2 > 0).sortBy(_._1).toSeq
-
-    val nonEntLabels = statRows.filter(_.getString(0) == "label")
-      .map(r => r.getString(1) -> r.getLong(2)).toMap
-    val entLabelRows = partials.filter(col("kind") === "ent")
-      .dropDuplicates("a")
-      .select(explode(from_json(col("b"),
-        org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.StringType)))
-        .as("label"))
-      .groupBy("label").count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val labelCounts = (nonEntLabels.keySet ++ entLabelRows.keySet).map { l =>
-      l -> (nonEntLabels.getOrElse(l, 0L) + entLabelRows.getOrElse(l, 0L))
+    def sums(kind: String): Map[String, Long] = statRows
+      .filter(_.getString(0) == kind).map(r => r.getString(1) -> r.getLong(2)).toMap
+    val chunkStats = statRows.filter(_.getString(0) == "stat").map { r =>
+      r.getString(1) -> (if (r.getString(1) == "tok_max") r.getLong(3) else r.getLong(2))
     }.toMap
 
-    val nonEntRels = statRows.filter(_.getString(0) == "rel")
-      .map(r => r.getString(1) -> r.getLong(2)).toMap
+    val labelsType = ArrayType(StringType)
+    val entities = partials.filter(col("kind") === "ent").dropDuplicates("a")
+      .select(col("a").as("id"), from_json(col("b"), labelsType).as("labels"))
+    val entLabels = entities.select(explode(col("labels")).as("label"))
+      .groupBy("label").count().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+
     val semRels = partials.filter(col("kind") === "semkey")
       .dropDuplicates("a", "b", "c")
       .groupBy("c").count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val edgeCounts = (nonEntRels.keySet ++ semRels.keySet).map { rt =>
-      rt -> (nonEntRels.getOrElse(rt, 0L) + semRels.getOrElse(rt, 0L))
-    }.toMap
 
     // semantic orphans: schema-labeled entities with no semantic edge in
     // either direction (distinct unions of the compact sets)
-    val entIds = partials.filter(col("kind") === "ent").dropDuplicates("a")
-      .filter(size(array_distinct(from_json(col("b"),
-        org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.StringType)))) > 1)
-      .select(col("a").as("id"))
     val endpointIds = partials.filter(col("kind") === "endpoint")
       .select(col("a").as("id")).distinct()
-    val semOrphans = entIds.join(endpointIds, Seq("id"), "left_anti").count()
+    val semOrphans = entities.filter(QaEvaluator.schemaEntity(col("labels")))
+      .select("id").join(endpointIds, Seq("id"), "left_anti").count()
 
-    val missingEmb = statSum("stat", "missing_emb")
-    val orphans = statSum("orphans", null)
-    val mismatches = statSum("mismatches", null)
-    val tokTotal = statSum("stat", "tok_total")
-    val charsTotal = statSum("stat", "chars_total")
-
-    val anomalies = Map(
-      "missing_embeddings" -> missingEmb,
-      "orphan_chunks" -> orphans,
-      "checksum_mismatches" -> mismatches,
-      "semantic_orphans" -> semOrphans)
-    val pass = missingEmb <= thresholds.maxMissingEmbeddings &&
-      orphans <= thresholds.maxOrphanChunks &&
-      mismatches <= thresholds.maxChecksumMismatches &&
-      semOrphans <= thresholds.maxSemanticOrphans
-    QaResult(
-      status = if (pass) "pass" else "fail",
-      counts = labelCounts.map { case (k, v) => s"label:$k" -> v } ++
-        edgeCounts.map { case (k, v) => s"rel:$k" -> v },
-      anomalies = anomalies,
-      tokenStats = Map(
-        "total" -> tokTotal.toDouble,
-        "max" -> tokMax.toDouble,
-        "mean" -> (if (chunksN == 0) 0.0 else tokTotal.toDouble / chunksN),
-        "chars_total" -> charsTotal.toDouble),
-      tokenHistogram = hist)
+    def plus(x: Map[String, Long], y: Map[String, Long]): Map[String, Long] =
+      (x.keySet ++ y.keySet).map(k => k -> (x.getOrElse(k, 0L) + y.getOrElse(k, 0L))).toMap
+    QaEvaluator.verdict(chunkStats,
+      labels = plus(sums("label"), entLabels),
+      rels = plus(sums("rel"), semRels),
+      orphans = sums("orphans").values.sum,
+      mismatches = sums("mismatches").values.sum,
+      semOrphans = semOrphans,
+      thresholds)
   }
 
   private def emptyPartials(spark: SparkSession): DataFrame = {

@@ -1,6 +1,6 @@
 package graft.qa
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Ingestion QA — the engine's self-verifying gate, mirroring the reference's
@@ -107,15 +107,86 @@ object QaEvaluator {
     */
   private val bucketLabels: Seq[String] = (bins.map(b => s"<=$b") :+ ">2048").sorted
 
+  /** The chunk-pass aggregates, named as QA partials name them: counts, token
+    * and character totals, the token max, missing embeddings, and one
+    * `hist:<bucket>` count per histogram bucket. Every one is a sum except
+    * `tok_max`, so per-partition values merge by summing (max for
+    * `tok_max`).
+    */
+  def chunkAggs: Seq[Column] = {
+    val t = tokenEstimate
+    val bucket = tokenBucket
+    Seq(
+      count(lit(1)).as("chunks"),
+      sum(t).as("tok_total"),
+      max(t).as("tok_max"),
+      sum(length(col("text"))).as("chars_total"),
+      sum(when(col("embedding").isNull || size(col("embedding")) === 0, 1L)
+        .otherwise(0L)).as("missing_emb")) ++
+      bucketLabels.map(b => sum(when(bucket === b, 1L).otherwise(0L)).as(s"hist:$b"))
+  }
+
+  /** Schema-labeled entity nodes: labels beyond the bare __Entity__
+    * catch-all. Those arise from relation/mention patterns and must be
+    * connected; data-derived candidates (label __Entity__ only) carry
+    * chunk_uids provenance, not edges, so they are not orphan anomalies.
+    */
+  def schemaEntity(labels: Column): Column =
+    array_contains(labels, "__Entity__") && size(array_distinct(labels)) > 1
+
+  /** Semantic relations, selected by provenance property rather than a
+    * hardcoded type list (P7; ref:queries/hybrid_retrieval.cypher:6).
+    */
+  def semanticEdge: Column = col("props").getItem("semantic_source").isNotNull
+
+  /** The gate's verdict from its measured parts: `chunk` holds the
+    * [[chunkAggs]] values by name (absent = 0), `labels`/`rels` the node
+    * label and relationship counts.
+    */
+  def verdict(
+      chunk: Map[String, Long],
+      labels: Map[String, Long],
+      rels: Map[String, Long],
+      orphans: Long,
+      mismatches: Long,
+      semOrphans: Long,
+      thresholds: QaThresholds
+  ): QaResult = {
+    def stat(name: String): Long = chunk.getOrElse(name, 0L)
+    val missingEmb = stat("missing_emb")
+    val pass = missingEmb <= thresholds.maxMissingEmbeddings &&
+      orphans <= thresholds.maxOrphanChunks &&
+      mismatches <= thresholds.maxChecksumMismatches &&
+      semOrphans <= thresholds.maxSemanticOrphans
+    val chunks = stat("chunks")
+    QaResult(
+      status = if (pass) "pass" else "fail",
+      counts = labels.map { case (k, v) => s"label:$k" -> v } ++
+        rels.map { case (k, v) => s"rel:$k" -> v },
+      anomalies = Map(
+        "missing_embeddings" -> missingEmb,
+        "orphan_chunks" -> orphans,
+        "checksum_mismatches" -> mismatches,
+        "semantic_orphans" -> semOrphans),
+      tokenStats = Map(
+        "total" -> stat("tok_total").toDouble,
+        "max" -> stat("tok_max").toDouble,
+        "mean" -> (if (chunks == 0) 0.0 else stat("tok_total").toDouble / chunks),
+        "chars_total" -> stat("chars_total").toDouble),
+      // absent = no row, the shape of a groupBy over the buckets
+      tokenHistogram = bucketLabels.map(b => b -> stat(s"hist:$b")).filter(_._2 > 0))
+  }
+
   /** QA gate, fused into exactly THREE Spark actions (the gate runs after
     * every build; at corpus scale each extra action is another full table
     * scan — the unfused form cost ~8):
-    *   1. ONE aggregation pass over chunks: stats + token histogram
-    *      (conditional sums over the fixed buckets) + missing-embedding count;
+    *   1. ONE aggregation pass over chunks: [[chunkAggs]];
     *   2. ONE pass over nodes ∪ edges for label/relationship counts;
     *   3. the three anomaly anti-joins batched into a single action (their
     *      1-row counts cross-joined and collected together).
     * QaEvaluatorSpec pins the action count with AQE off (1 action = 1 job).
+    * This is the reference evaluation over whole tables; run() gates through
+    * [[IncrementalQa]], which is pinned equal to it.
     */
   def evaluate(
       sourceTurns: DataFrame,
@@ -126,23 +197,11 @@ object QaEvaluator {
       thresholds: QaThresholds = QaThresholds()
   ): QaResult = {
     // ---- action 1: the fused chunk pass ----
-    val t = tokenEstimate
-    val bucket = tokenBucket
-    val histAggs = bucketLabels.map(b =>
-      sum(when(bucket === b, 1L).otherwise(0L)).as(s"hist:$b"))
-    val chunkAggs = Seq(
-      count(lit(1)).as("chunks"),
-      sum(t).as("tok_total"),
-      max(t).as("tok_max"),
-      avg(t).as("tok_mean"),
-      sum(length(col("text"))).as("chars_total"),
-      sum(when(col("embedding").isNull || size(col("embedding")) === 0, 1L)
-        .otherwise(0L)).as("missing_emb")) ++ histAggs
-    val statsRow = chunks.agg(chunkAggs.head, chunkAggs.tail: _*).collect()(0)
-    val missingEmb = statsRow.getAs[Long]("missing_emb")
-    val hist = bucketLabels
-      .map(b => b -> statsRow.getAs[Long](s"hist:$b"))
-      .filter(_._2 > 0) // same shape as the former groupBy (absent = no row)
+    val aggs = chunkAggs
+    val statsRow = chunks.agg(aggs.head, aggs.tail: _*).collect()(0)
+    val chunkStats = statsRow.schema.fieldNames.zipWithIndex.collect {
+      case (name, i) if !statsRow.isNullAt(i) => name -> statsRow.getLong(i)
+    }.toMap
 
     // ---- action 2: label + relationship counts in one union pass ----
     val kindCounts = nodes
@@ -154,45 +213,18 @@ object QaEvaluator {
     val edgeCounts = kindCounts.collect { case ("rel", k, n) => k -> n }.toMap
 
     // ---- action 3: the three anomaly anti-joins, batched ----
-    // Orphan check covers schema-labeled entities (labels beyond the bare
-    // __Entity__ catch-all): those arise from relation/mention patterns and
-    // must be connected. Data-derived candidate entities (label __Entity__
-    // only) legitimately exist without relations — they carry chunk_uids
-    // provenance, not edges — so they are not anomalies.
-    val entityNodes = nodes.filter(array_contains(col("labels"), "__Entity__") &&
-      size(array_distinct(col("labels"))) > 1)
-    // semantic relations selected by provenance property, not a hardcoded
-    // type list (P7; ref:queries/hybrid_retrieval.cypher:6)
-    val semanticEdges = edges.filter(col("props").getItem("semantic_source").isNotNull)
     val anomalyRow = orphanChunks(chunks, edges).agg(count(lit(1)).as("orphans"))
       .crossJoin(checksumMismatches(sourceTurns, storedChecksums)
         .agg(count(lit(1)).as("mismatches")))
-      .crossJoin(orphanEntities(entityNodes, semanticEdges)
+      .crossJoin(orphanEntities(nodes.filter(schemaEntity(col("labels"))),
+          edges.filter(semanticEdge))
         .agg(count(lit(1)).as("sem_orphans")))
       .collect()(0)
-    val orphans = anomalyRow.getAs[Long]("orphans")
-    val mismatches = anomalyRow.getAs[Long]("mismatches")
-    val semOrphans = anomalyRow.getAs[Long]("sem_orphans")
 
-    val anomalies = Map(
-      "missing_embeddings" -> missingEmb,
-      "orphan_chunks" -> orphans,
-      "checksum_mismatches" -> mismatches,
-      "semantic_orphans" -> semOrphans)
-    val pass = missingEmb <= thresholds.maxMissingEmbeddings &&
-      orphans <= thresholds.maxOrphanChunks &&
-      mismatches <= thresholds.maxChecksumMismatches &&
-      semOrphans <= thresholds.maxSemanticOrphans
-    QaResult(
-      status = if (pass) "pass" else "fail",
-      counts = labelCounts.map { case (k, v) => s"label:$k" -> v } ++
-        edgeCounts.map { case (k, v) => s"rel:$k" -> v },
-      anomalies = anomalies,
-      tokenStats = Map(
-        "total" -> statsRow.getAs[Long]("tok_total").toDouble,
-        "max" -> statsRow.getAs[Long]("tok_max").toDouble,
-        "mean" -> statsRow.getAs[Double]("tok_mean"),
-        "chars_total" -> statsRow.getAs[Long]("chars_total").toDouble),
-      tokenHistogram = hist)
+    verdict(chunkStats, labelCounts, edgeCounts,
+      orphans = anomalyRow.getAs[Long]("orphans"),
+      mismatches = anomalyRow.getAs[Long]("mismatches"),
+      semOrphans = anomalyRow.getAs[Long]("sem_orphans"),
+      thresholds)
   }
 }

@@ -160,9 +160,10 @@ class PipelineSpec extends AnyFunSuite {
       "cap must keep the globally smallest uids across salt buckets")
   }
 
-  test("saltProvenance=false builds an identical graph (provenance-skew parity)") {
+  test("single-phase provenance builds an identical graph (provenance-skew parity)") {
     // The salted two-phase provenance aggregation is a physical-plan
-    // decision only: switching it off may not change a single node/edge row.
+    // decision only: keeping every group single-phase may not change a
+    // single node/edge row.
     // Both builds run under raised shuffle parallelism: the hot threshold is
     // total/parallelism, and at the suite's parallelism of 4 the 40-conv
     // corpus measures flat (hot set empty -> both sides would take the
@@ -180,7 +181,10 @@ class PipelineSpec extends AnyFunSuite {
       val gSalted = KgBuild.buildGraph(turns, cfg.copy(saltProvenanceFloor = 0L))
       assert(gSalted.hotProvNorms.nonEmpty,
         "test corpus produced no hot canon norms — the two-phase path is not exercised")
-      val g2 = KgBuild.buildGraph(turns, cfg.copy(saltProvenance = false))
+      // floor Long.MaxValue: no group can clear it, so every group takes the
+      // single-phase plan
+      val g2 = KgBuild.buildGraph(turns, cfg.copy(saltProvenanceFloor = Long.MaxValue))
+      assert(g2.hotProvNorms.isEmpty, "the single-phase side salted a canon group")
       def cmp(df: org.apache.spark.sql.DataFrame) = df.columns.foldLeft(df) {
         case (d, c) if d.schema(c).dataType.isInstanceOf[org.apache.spark.sql.types.MapType] =>
           d.withColumn(c, array_sort(map_entries(col(c))))

@@ -400,6 +400,31 @@ class ResumeSpec extends AnyFunSuite {
     assert(inc2 == fullQa(dir, mutated), "changed-partition incremental QA diverged from full QA")
   }
 
+  test("incremental QA recomputes the orphan partial when only a partition's edges change") {
+    val turns = TranscriptGen.table(spark, 12L).toDF().cache()
+    val dir = Files.createTempDirectory("graft-incqa-edges").toString
+    val c = cfg.copy(runKey = "kg:incqa-edges")
+    assert(KgBuild.run(spark, turns, c, dir).status == "pass")
+
+    // rewrite one partition's edges without its HAS_CHUNK rows; its chunks
+    // (and so the chunk-keyed partials) stay as they are
+    val part = spark.read.parquet(s"$dir/chunks").select("part_id").distinct()
+      .orderBy("part_id").head().getInt(0)
+    val edgeDir = s"$dir/edges/part_id=$part"
+    val kept = spark.read.parquet(edgeDir).filter(col("rel_type") =!= "HAS_CHUNK")
+      .localCheckpoint()
+    kept.write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(edgeDir)
+    val partChunks = spark.read.parquet(s"$dir/chunks").filter(col("part_id") === part)
+      .dropDuplicates("chunk_uid").count()
+    assert(partChunks > 0)
+
+    val qa = graft.qa.IncrementalQa.evaluate(spark, dir, turns, c)
+    assert(qa.anomalies("orphan_chunks") == partChunks,
+      "a cached orphan partial survived a change to its partition's edges")
+    assert(qa.status == "fail")
+    assert(qa == fullQa(dir, turns), "edges-only incremental QA diverged from full QA")
+  }
+
   test("incremental run over one changed partition scans only that partition's stage files") {
     // 40 conversations (including the hot 20x one) so the unchanged
     // partitions' bulk clearly dominates the footer/listing slack
