@@ -65,10 +65,11 @@ object Bench {
   /** Warm up until the full-size build time STABILIZES (two consecutive
     * full-size builds within 15%), capped at maxWarmups builds total.
     * A fixed warm-up count is not enough: whole-stage-codegen classes keep
-    * C2-compiling across the first several builds (DebugBench measured
-    * jitTotal still climbing 146→162 s across builds 2..5 at 200k convs,
-    * with wall time 46→17 s), so an early "measured" run is really still a
-    * warm-up. Returns all warm-up times for emission in the bench artifact.
+    * C2-compiling across the first several builds (at 200k convs,
+    * local[32], total JIT time still climbed 146→162 s across builds 2..5
+    * while wall time fell 46→17 s), so an early "measured" run is really
+    * still a warm-up. Returns all warm-up times for emission in the bench
+    * artifact.
     */
   def warmUntilStable(spark: SparkSession, numConvs: Long, maxWarmups: Int = 6): Seq[Double] = {
     val ts = scala.collection.mutable.ArrayBuffer[Double]()
@@ -109,6 +110,28 @@ object Bench {
     (trails, errors)
   }
 
+  /** The one JSON line `main` prints; `queries` maps each query name (and
+    * `kg_pipeline_e2e`) to its seconds. A non-finite number prints as null.
+    */
+  def resultLine(sfDir: String, triplesPerSec: Double, totalSec: Double,
+      turns: Long, triples: Long, convs: Long, warmupSecs: Seq[Double],
+      runSecs: Seq[Double], queries: Map[String, Double],
+      trails: Map[String, Seq[Double]], errors: Map[String, String]): String =
+    Json.obj(
+      "metric" -> Json.str("end-to-end triples/sec (extract->link->canonicalize->materialize)"),
+      "value" -> Json.num(triplesPerSec),
+      "unit" -> Json.str("triples/sec"),
+      "total_sec" -> Json.num(totalSec),
+      "kg_turns" -> turns.toString,
+      "kg_triples" -> triples.toString,
+      "kg_convs" -> convs.toString,
+      "kg_warmup_sec" -> Json.nums(warmupSecs),
+      "kg_run_sec" -> Json.nums(runSecs),
+      "queries" -> Json.obj(queries.toSeq.map { case (k, v) => k -> Json.num(v) }: _*),
+      "query_trails" -> Json.obj(trails.toSeq.map { case (k, ts) => k -> Json.nums(ts) }: _*),
+      "errors" -> Json.obj(errors.toSeq.map { case (k, e) => k -> Json.str(e) }: _*),
+      "sf" -> Json.str(sfDir))
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -140,20 +163,9 @@ object Bench {
     // silently becoming the headline — same policy kg_run_sec already has.
     val (trails, errors) = timeQueries(spark, sfDir, SparkEntry.queries.toSeq)
     val results = trails.map { case (name, ts) => name -> ts.min }
-    val qs = (results ++ Map("kg_pipeline_e2e" -> kgSec))
-      .map { case (k, v) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val trailsJson = trails
-      .map { case (k, ts) => "\"" + k + "\":" + ts.mkString("[", ",", "]") }
-      .mkString("{", ",", "}")
-    val errorsJson = errors
-      .map { case (k, e) => Json.str(k) + ":" + Json.str(e) }
-      .mkString("{", ",", "}")
     val total = results.values.sum + kgSec
-    val warmJson = warmups.mkString("[", ",", "]")
-    val runsJson = runSecs.mkString("[", ",", "]")
-    println(
-      s"""{"metric":"end-to-end triples/sec (extract->link->canonicalize->materialize)","value":$triplesPerSec,"unit":"triples/sec","total_sec":$total,"kg_turns":$nTurns,"kg_triples":$nTriples,"kg_convs":$headlineConvs,"kg_warmup_sec":$warmJson,"kg_run_sec":$runsJson,"queries":$qs,"query_trails":$trailsJson,"errors":$errorsJson,"sf":"$sfDir"}""")
+    println(resultLine(sfDir, triplesPerSec, total, nTurns, nTriples, headlineConvs,
+      warmups, runSecs, results + ("kg_pipeline_e2e" -> kgSec), trails, errors))
     spark.stop()
   }
 }

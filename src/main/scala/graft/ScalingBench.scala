@@ -1,5 +1,7 @@
 package graft
 
+import graft.util.Json
+
 /** Two-parallelism scaling evidence (BASELINE.json: N→4N executor scaling
   * efficiency >= 0.8, evidenced in-sandbox by the same job at local[8] and
   * local[32] on identical input).
@@ -35,7 +37,17 @@ object ScalingBench {
     val median = secs(1)
     val (nTurns, nTriples, _) = runs.head
     spark.stop()
-    println(
-      s"""{"metric":"kg build seconds at local[$cpus]","value":$median,"unit":"sec","runs":[${secs.mkString(",")}],"warmups":[${warmups.mkString(",")}],"throughput":${nTriples / median},"turns":$nTurns,"triples":$nTriples,"convs":$numConvs,"cpus":$cpus,"sf":"$sfDir"}""")
+    println(Json.obj(
+      "metric" -> Json.str(s"kg build seconds at local[$cpus]"),
+      "value" -> Json.num(median),
+      "unit" -> Json.str("sec"),
+      "runs" -> Json.nums(secs),
+      "warmups" -> Json.nums(warmups),
+      "throughput" -> Json.num(nTriples / median),
+      "turns" -> nTurns.toString,
+      "triples" -> nTriples.toString,
+      "convs" -> numConvs.toString,
+      "cpus" -> cpus.toIntOption.fold(Json.str(cpus))(_.toString),
+      "sf" -> Json.str(sfDir)))
   }
 }

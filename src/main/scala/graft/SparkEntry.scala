@@ -487,11 +487,11 @@ object SparkEntry {
         .select("chunk_uid", "score_ppm")
         .orderBy("chunk_uid")
     }),
-    // J6 over a DERIVED term graph, value-verified: the REAL turnToChunk
-    // range join binds mentions to chunks, the REAL semanticExpansion does
-    // the undirected 1-hop collect — all mirrored in SQL. (The gazetteer-KG
-    // expansion path is covered end-to-end by AskSpec, including the
-    // inbound-relation case.)
+    // J6 over a DERIVED term graph, value-verified: mentions bind to the
+    // first chunk covering their turn (ConvStage.perConversation's rule),
+    // the REAL semanticExpansion does the undirected 1-hop collect — all
+    // mirrored in SQL. (The gazetteer-KG expansion path is covered
+    // end-to-end by AskSpec, including the inbound-relation case.)
     "q_semantic_expansion" -> ((s, d) => {
       import s.implicits._
       val ex = Extractor.termExtractor(gazetteerTerms)
@@ -530,7 +530,7 @@ object SparkEntry {
           val uids = chunks.map(rc => Chunker.chunkUid(convId, rc.index, rc.text))
           // first (min-index) chunk covering each turn's start offset —
           // chunk coverage is contiguous and offsets are monotone, so one
-          // forward sweep reproduces ChunkStage.turnToChunk's min_by(index)
+          // forward sweep finds it, as ConvStage.perConversation does
           val turnChunk = new Array[String](nTurns)
           var ti = 0
           chunks.foreach { rc =>

@@ -463,7 +463,7 @@ object KgBuild {
       // history-scaled read on an incremental run).
       val pendingIds: Seq[Int] = nodes.select("part_id").distinct()
         .collect().map(_.getInt(0)).toSeq
-      val existingPending = readParquetIfPresent(spark, nodesPath) match {
+      val existingPending = Materializer.readParquetIfPresent(spark, nodesPath) match {
         case Some(prior) => prior.filter(col("part_id").isin(pendingIds: _*))
         case None => nodes.limit(0)
       }
@@ -541,7 +541,7 @@ object KgBuild {
     // A transient manifest read failure propagates (readParquetIfPresent):
     // it must not be mistaken for "no manifest = nothing to roll back",
     // which would silently skip the compensating delete entirely.
-    val touched: Seq[Int] = readParquetIfPresent(spark, s"$outDir/_manifest") match {
+    val touched: Seq[Int] = Materializer.readParquetIfPresent(spark, s"$outDir/_manifest") match {
       case Some(m) => m.filter(col("run_key").isin(badRunKeys: _*))
         .select("part_id").distinct().collect().map(_.getInt(0)).toSeq.sorted
       case None => Seq.empty
@@ -581,7 +581,7 @@ object KgBuild {
     */
   private[graft] def invalidateManifest(spark: SparkSession, outDir: String,
       badRunKeys: Seq[String], touched: Seq[Int]): Unit =
-    if (readParquetIfPresent(spark, s"$outDir/_manifest").isDefined)
+    if (Materializer.readParquetIfPresent(spark, s"$outDir/_manifest").isDefined)
       rollbackStageFiltered(spark, outDir, "_manifest",
         df => df.filter(!(col("run_key").isin(badRunKeys: _*) ||
           col("part_id").isin(touched: _*))))
@@ -634,10 +634,6 @@ object KgBuild {
     clearRollbackMarker(spark, outDir)
   }
 
-  private[graft] def readParquetIfPresent(
-      spark: SparkSession, path: String): Option[DataFrame] =
-    Materializer.readParquetIfPresent(spark, path)
-
   /** Swap-rewrite of ONLY the touched part_id directories of one partitioned
     * stage: read the touched partitions (pruned), drop the bad runs' rows,
     * stage the kept rows to a tmp tree, then per-partition delete+rename.
@@ -668,7 +664,7 @@ object KgBuild {
     }
     // a previous full rollback can leave the dir with no data files at all
     // (schema unreadable) — nothing to rewrite then
-    val srcOpt = readParquetIfPresent(spark, path)
+    val srcOpt = Materializer.readParquetIfPresent(spark, path)
     if (srcOpt.isEmpty) return
     val kept = srcOpt.get
       .filter(col("part_id").isin(touched: _*)) // partition-pruned

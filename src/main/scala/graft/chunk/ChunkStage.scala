@@ -76,20 +76,4 @@ object ChunkStage {
     turns.withColumn("start_off",
       coalesce(sum(length(col("text")) + 1).over(w), lit(0L)).cast("int"))
   }
-
-  /** Assign each turn to the chunk covering its start offset (min index when
-    * the offset falls in an overlap region). A per-conversation range join:
-    * the equi-key conv_id keeps it co-partitioned, the range predicate only
-    * compares within a conversation.
-    */
-  def turnToChunk(turnsWithOffsets: DataFrame, chunks: DataFrame): DataFrame = {
-    val c = chunks.select(
-      col("conv_id"), col("chunk_uid"), col("index"),
-      col("start").as("c_start"), col("end").as("c_end"))
-    turnsWithOffsets
-      .join(c, Seq("conv_id"))
-      .filter(col("start_off") >= col("c_start") && col("start_off") < col("c_end"))
-      .groupBy("conv_id", "turn_idx")
-      .agg(min_by(col("chunk_uid"), col("index")).as("chunk_uid"))
-  }
 }

@@ -4,9 +4,6 @@ import java.util.regex.Pattern
 
 import graft.model.Mention
 import graft.util.Determinism
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions._
 
 /** Deterministic mention detection + per-turn relation-candidate extraction.
   *
@@ -22,8 +19,9 @@ import org.apache.spark.sql.functions._
   *   Company "launched" Product  -> LAUNCHED
   *   Person  "joined"   Company  -> JOINED
   *   Person  "joined in <year>"  -> JOINED with anaphoric object = the most
-  *       recent prior turn's Company mention (window-ordered over
-  *       (conv_id, turn_idx) — the cross-turn rule of SURVEY.md W2).
+  *       recent prior turn's Company mention (extractTurn marks the
+  *       candidate; ConvStage.perConversation resolves it in turn order —
+  *       the cross-turn rule of SURVEY.md W2).
   */
 object Extractor {
 
@@ -171,55 +169,5 @@ object Extractor {
     }
     ExtractedTurn(convId, turnIdx, mentions, rels.result(),
       scanCandidates(convId, turnIdx, text, mentions))
-  }
-
-  /** Distributed extraction: one narrow pass over turns (no shuffle). */
-  def extract(turns: DataFrame): Dataset[ExtractedTurn] = {
-    val spark = turns.sparkSession
-    import spark.implicits._
-    turns
-      .select("conv_id", "turn_idx", "text")
-      .as[(String, Int, String)]
-      .mapPartitions { it =>
-        // mentionPattern is initialized lazily here, once per partition/JVM
-        it.map { case (c, t, x) => extractTurn(c, t, x) }
-      }
-  }
-
-  /** Flat mention rows. */
-  def mentions(extracted: Dataset[ExtractedTurn]): Dataset[Mention] = {
-    val spark = extracted.sparkSession
-    import spark.implicits._
-    extracted.flatMap(_.mentions)
-  }
-
-  /** Relation candidates with anaphoric objects resolved: the object of an
-    * anaphoric JOINED is the Company norm of the most recent PRIOR turn that
-    * mentions a company (largest begin offset within that turn). Runs as two
-    * window passes partitioned by conv_id — this is the stage that motivates
-    * the explicit `repartition(conv_id)` at scale (long-conversation skew is
-    * bounded because a window's state is one conversation).
-    */
-  def relations(extracted: Dataset[ExtractedTurn]): DataFrame = {
-    val spark = extracted.sparkSession
-    import spark.implicits._
-    val perTurnCompany = extracted
-      .map { e =>
-        val c = e.mentions.filter(_.label == "Company").sortBy(_.begin).lastOption
-        (e.conv_id, e.turn_idx, c.map(_.norm))
-      }
-      .toDF("conv_id", "turn_idx", "company_norm")
-    val w = Window.partitionBy("conv_id").orderBy("turn_idx")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val prevCompany = perTurnCompany
-      .withColumn("prev_company_norm", last("company_norm", ignoreNulls = true).over(w))
-      .select("conv_id", "turn_idx", "prev_company_norm")
-    val rels = extracted.flatMap(_.rels).toDF()
-    rels
-      .join(prevCompany, Seq("conv_id", "turn_idx"), "left")
-      .withColumn("obj_norm",
-        when(col("anaphora"), col("prev_company_norm")).otherwise(col("obj_norm")))
-      .filter(col("obj_norm").isNotNull)
-      .select("conv_id", "turn_idx", "subj_norm", "pred", "obj_norm", "anaphora")
   }
 }

@@ -4,8 +4,9 @@ import graft.model.RunConfig
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Graph materialization: MERGE-semantics upsert, run-key stamping,
-  * partition-manifest lineage, rollback — the Spark re-expression of the
+/** Graph materialization: MERGE-semantics upsert, run-key stamping and
+  * partition-manifest lineage (the rollback that reads them is
+  * KgBuild.rollbackRun) — the Spark re-expression of the
   * reference's Neo4j writer + rollback Cypher
   * (ref:src/fancyrag/kg/pipeline.py:822-925; ref:src/fancyrag/db/neo4j_queries.py:52-180).
   *
@@ -190,13 +191,6 @@ object Materializer {
       .agg(sum(rowHash.cast("decimal(38,0)"))
         .cast("string").as("input_checksum"))
   }
-
-  /** Rollback: remove a failed run's rows — the compensating delete of
-    * ref:src/fancyrag/db/neo4j_queries.py:122-180, expressed as a left_anti
-    * join on ingest_run_key and rewrite.
-    */
-  def rollback(df: DataFrame, badRunKeys: DataFrame): DataFrame =
-    df.join(badRunKeys.toDF("ingest_run_key"), Seq("ingest_run_key"), "left_anti")
 
   /** Reset: the reference's MATCH (n) DETACH DELETE n
     * (ref:src/fancyrag/db/neo4j_queries.py:52-55) = overwrite the output dirs.

@@ -18,7 +18,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *  - stateful cross-turn anaphora: the "joined in <year>" rule needs the
   *    most recent prior Company mention PER CONVERSATION — carried across
   *    micro-batches with flatMapGroupsWithState keyed by conv_id (the
-  *    streaming form of the batch window rule in Extractor.relations).
+  *    streaming form of the running variable in ConvStage.perConversation).
   *
   * Ordering caveat: within a micro-batch turns are sorted by turn_idx; across
   * micro-batches the source must deliver a conversation's turns in order

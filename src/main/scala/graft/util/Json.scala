@@ -26,4 +26,11 @@ object Json {
   /** A JSON number; NaN and the infinities, which JSON cannot carry, become null. */
   def num(d: Double): String =
     if (java.lang.Double.isFinite(d)) d.toString else "null"
+
+  /** A JSON array of numbers (see [[num]]). */
+  def nums(ds: Seq[Double]): String = ds.map(num).mkString("[", ",", "]")
+
+  /** A JSON object from keys and already-encoded JSON values, in order. */
+  def obj(fields: (String, String)*): String =
+    fields.map { case (k, v) => str(k) + ":" + v }.mkString("{", ",", "}")
 }

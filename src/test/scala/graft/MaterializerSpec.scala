@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import graft.materialize.{Materializer, VectorExport}
+import graft.materialize.Materializer
 import graft.model.{ChunkProfile, RunConfig}
 import graft.source.{FileSource, TranscriptGen}
 import org.apache.spark.sql.functions._
@@ -35,23 +35,48 @@ class MaterializerSpec extends AnyFunSuite {
     assert(r.getString(1) == "v" && r.getMap[String, String](2).toMap == Map("k" -> "1"))
   }
 
-  test("vector export: dimension guard, payload projection, upsert (S10)") {
-    val turns = TranscriptGen.table(spark, 4L).toDF()
-    val g = graft.app.KgBuild.buildGraph(turns, RunConfig(runKey = "kg:vec"))
-    val dir = Files.createTempDirectory("graft-vec").toString + "/collection"
-    val n1 = VectorExport.upsert(spark, g.chunks, dir, graft.app.KgBuild.EmbeddingDim)
-    assert(n1 > 0)
-    // re-export is idempotent (upsert by chunk_id)
-    val n2 = VectorExport.upsert(spark, g.chunks, dir, graft.app.KgBuild.EmbeddingDim)
-    assert(n2 == n1)
-    val coll = spark.read.parquet(dir)
-    assert(coll.count() == n1)
-    assert(coll.columns.contains("chunk_id") && coll.columns.contains("embedding"))
-    // dimension guard trips on wrong dim
-    val ex = intercept[IllegalArgumentException] {
-      VectorExport.upsert(spark, g.chunks, dir + "2", 999)
+  test("built node and edge props follow the reference's property rules") {
+    // ref:src/fancyrag/kg/pipeline.py:759-819: no null value, integers as
+    // digits, provenance lists as sorted JSON arrays, and every semantic
+    // node and edge stamped with its source and git commit
+    val turns = TranscriptGen.table(spark, 12L).toDF()
+    val g = graft.app.KgBuild.buildGraph(turns,
+      RunConfig(runKey = "kg:props", gitCommit = Some("0123abcd")))
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val intKeys = Set("seq", "index", "n_turns", "turn_idx")
+    def check(what: String, props: Map[String, String], semantic: Boolean): Unit = {
+      props.foreach { case (k, v) =>
+        assert(v != null, s"$what: null $k")
+        if (intKeys(k)) assert(v.matches("-?\\d+"), s"$what: $k=$v")
+        if (k == "chunk_uids") {
+          val arr = mapper.readTree(v)
+          assert(arr.isArray && arr.size > 0, s"$what: chunk_uids=$v")
+          val uids = (0 until arr.size).map { i =>
+            assert(arr.get(i).isTextual, s"$what: chunk_uids=$v"); arr.get(i).asText
+          }
+          assert(uids == uids.distinct.sorted, s"$what: chunk_uids=$v")
+        }
+      }
+      if (semantic) {
+        assert(props.get("semantic_source").contains(graft.app.KgBuild.SemanticSource), what)
+        assert(props.get("git_commit").contains("0123abcd"), what)
+      }
     }
-    assert(ex.getMessage.contains("dimension"))
+    val nodes = g.nodes.select("id", "labels", "props").collect()
+    val edges = g.edges.select("src", "dst", "rel_type", "props").collect()
+    nodes.foreach { r =>
+      check(r.getString(0), r.getMap[String, String](2).toMap,
+        semantic = r.getSeq[String](1).contains("__Entity__"))
+    }
+    edges.foreach { r =>
+      check(s"${r.getString(0)}-${r.getString(2)}->${r.getString(1)}",
+        r.getMap[String, String](3).toMap, semantic = r.getString(2) != "HAS_CHUNK")
+    }
+    // every rule above had rows to bite on
+    val keys = (nodes.map(_.getMap[String, String](2)) ++ edges.map(_.getMap[String, String](3)))
+      .flatMap(_.keys).toSet
+    assert((intKeys + "chunk_uids" + "git_commit").subsetOf(keys), s"keys seen: $keys")
+    g.release()
     spark.catalog.clearCache()
   }
 
@@ -74,15 +99,6 @@ class MaterializerSpec extends AnyFunSuite {
       FileSource.readFile(spark, dir.toString + "/missing.txt")
     }
     spark.catalog.clearCache()
-  }
-
-  test("pushBatched streams every partition in bounded batches (S10 transport shape)") {
-    val rows = spark.range(1000).toDF("id").repartition(3)
-    val batches = VectorExport.pushBatched(rows, 100) { b =>
-      assert(b.nonEmpty && b.size <= 100, s"batch size ${b.size} out of bounds")
-    }
-    // >= ceil(1000/100) batches; at most one ragged batch extra per partition
-    assert(batches >= 10 && batches <= 13, s"unexpected batch count $batches")
   }
 
   test("fetch by id strips nothing it shouldn't and filters exactly (R4)") {

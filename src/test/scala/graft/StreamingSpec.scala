@@ -2,7 +2,8 @@ package graft
 
 import java.sql.Timestamp
 
-import graft.model.Turn
+import graft.chunk.ConvStage
+import graft.model.{ChunkProfile, Turn}
 import graft.streaming.StreamingKg
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.OutputMode
@@ -54,12 +55,9 @@ class StreamingSpec extends AnyFunSuite {
       val streamed = spark.table("rels2")
         .select("subj_norm", "pred", "obj_norm")
         .collect().map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
-      val batch = {
-        val df = turns.toDF()
-        graft.extract.Extractor.relations(graft.extract.Extractor.extract(df))
-          .select("subj_norm", "pred", "obj_norm")
-          .collect().map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
-      }
+      val batch = ConvStage.perConversation(turns.head.conv_id,
+        turns.map(t => (t.turn_idx, t.text)), ChunkProfile.text)
+        .rels.map(r => (r.subj_norm, r.pred, r.obj_norm)).toSet
       assert(streamed == batch)
     } finally query.stop()
   }
